@@ -213,7 +213,7 @@ object SparkEntry {
     graft.model.Tables.clearSchemaCache()
     // checkpointed posting/signature intermediates inside the dedup
     // library (r21) ride the same teardown
-    try graft.dedup.Dedup.releaseCheckpoints() catch { case _: Throwable => () }
+    graft.dedup.Dedup.releaseCheckpoints()
     pqCodebookCache.clear() // driver-side Seqs, nothing persisted
     opqAllocCache.clear()
     opqCodebookCache.clear()
@@ -241,8 +241,7 @@ object SparkEntry {
     val it4 = bpeCache.entrySet().iterator()
     while (it4.hasNext) {
       val e = it4.next()
-      try graft.textual.Bpe.unpersistCheckpoint(e.getValue._2)
-      catch { case _: Throwable => () }
+      graft.operators.Materialize.unpersist(e.getValue._2)
       it4.remove()
     }
     sessionIds.clear()
@@ -996,7 +995,7 @@ object SparkEntry {
     // unpersist discipline) instead of leaking them for the session.
     val edgeDeg =
       try graft.operators.Materialize.materializeOnly(edgesM.join(deg, Seq("src")))
-      finally graft.textual.Bpe.unpersistCheckpoint(edgesM)
+      finally graft.operators.Materialize.unpersist(edgesM)
     try {
       val base = 1000000000000L / n
       var ranks = nodes.select(col("id"), lit(base).as("r"))
@@ -1026,7 +1025,7 @@ object SparkEntry {
       val spark = nodes.sparkSession
       import spark.implicits._
       rows.toDF("vec_id", "rank_fp")
-    } finally graft.textual.Bpe.unpersistCheckpoint(edgeDeg)
+    } finally graft.operators.Materialize.unpersist(edgeDeg)
   }
 
   // (r22: the per-object transient-checkpoint registry moved to

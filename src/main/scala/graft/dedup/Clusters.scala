@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Duplicate-cluster assignment: connected components over a near-dup
   * pair list — the step that turns any pairwise dedup output (n-gram
   * Jaccard, MinHash, SimHash, embedding-cosine) into "keep one document
@@ -40,19 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object Clusters {
 
-  /** The RDD a localCheckpointed Dataset pins to executor block
-    * managers. Dataset.localCheckpoint offers no unpersist seam of its
-    * own, so without this every iterative round would leak one full
-    * edge-set copy for the life of the session (r5 advice) — O(log n)
-    * pinned copies per connectedComponents call.
-    */
-  private def unpersistCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Per-vertex component labels: (id, label) with label = min vertex id
     * reachable in the pair graph. Only vertices that appear in at least
     * one NON-self pair are returned: self-loops (id_a == id_b) are
@@ -87,7 +76,7 @@ object Clusters {
       val spark = pairs.sparkSession
       import spark.implicits._
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      unpersistCheckpoint(edges)
+      Materialize.unpersist(edges)
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -128,7 +117,7 @@ object Clusters {
         least(col("src"), col("dst")).as("lo"))
       .distinct()
       .localCheckpoint()
-    unpersistCheckpoint(symEdges)
+    Materialize.unpersist(symEdges)
     var curCount = cur.count()
     var converged = false
     var iter = 0
@@ -162,7 +151,7 @@ object Clusters {
       // that changed the edge count skip the anti-join outright.
       val nextCount = next.count()
       converged = nextCount == curCount && next.exceptAll(cur).isEmpty
-      unpersistCheckpoint(cur)
+      Materialize.unpersist(cur)
       cur = next
       curCount = nextCount
       iter += 1
@@ -216,11 +205,11 @@ object Clusters {
         .join(labels.withColumnRenamed("label", "prev"), "id")
         .filter(col("label") < col("prev"))
         .isEmpty
-      unpersistCheckpoint(labels)
+      Materialize.unpersist(labels)
       labels = next
       iter += 1
     }
-    unpersistCheckpoint(edges)
+    Materialize.unpersist(edges)
     if (!converged) {
       throw new IllegalStateException(
         s"minLabelPropagation did not converge within $maxIter rounds")

@@ -33,20 +33,13 @@ object Dedup {
     df
   }
 
-  /** Unpersist every registered checkpointed intermediate. A plain
-    * DataFrame.unpersist is a CacheManager no-op for localCheckpoint
-    * frames — the persisted object is the UNDERLYING RDD behind the
-    * LogicalRDD leaf, so that is what gets unpersisted (the
-    * Bpe.unpersistCheckpoint technique).
+  /** Unpersist every registered checkpointed intermediate
+    * ([[graft.operators.Materialize.unpersist]]).
     */
   def releaseCheckpoints(): Unit = {
     var df = transientCheckpoints.poll()
     while (df != null) {
-      try df.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      } catch { case _: Throwable => () }
+      graft.operators.Materialize.unpersist(df)
       df = transientCheckpoints.poll()
     }
   }

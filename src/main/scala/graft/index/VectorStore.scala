@@ -206,7 +206,7 @@ class VectorStore(spark: SparkSession, warehouse: String) {
     try {
       val (before, after) = rewrite(name)(_.join(del, Seq("id"), "left_anti"))
       before - after
-    } finally graft.textual.Bpe.unpersistCheckpoint(del) // was leaked per call (r22)
+    } finally graft.operators.Materialize.unpersist(del) // was leaked per call (r22)
   }
 
   /** collection.upsert(records): replace existing ids, insert new ones —
@@ -241,8 +241,8 @@ class VectorStore(spark: SparkSession, warehouse: String) {
             "deduplicate the batch before upserting")
         rewrite(name)(
           _.join(incoming, Seq("id"), "left_anti").unionByName(newRows))
-      } finally graft.textual.Bpe.unpersistCheckpoint(incoming)
-    } finally graft.textual.Bpe.unpersistCheckpoint(newRows)
+      } finally graft.operators.Materialize.unpersist(incoming)
+    } finally graft.operators.Materialize.unpersist(newRows)
   }
 
   /** list_collections(): filesystem metadata, no Spark job. Rewrite

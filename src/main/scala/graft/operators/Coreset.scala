@@ -65,10 +65,10 @@ object Coreset {
         mind = mind.select(col(idCol), col(embCol),
             least(col("md"), distFp(typedLit(lastVec), col(embCol))).as("md"))
           .localCheckpoint(true)
-        graft.textual.Bpe.unpersistCheckpoint(prev)
+        Materialize.unpersist(prev)
       }
       picks.toSeq
-    } finally graft.textual.Bpe.unpersistCheckpoint(mind)
+    } finally Materialize.unpersist(mind)
   }
 
   /** The oracle's quantized distance, in memory: left-to-right double

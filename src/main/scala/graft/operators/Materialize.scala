@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** The ONE materialization point for "compute this intermediate once,
@@ -25,10 +27,8 @@ import org.apache.spark.sql.DataFrame
   *    long-running jobs on preemptible executors: survives executor
   *    loss at the cost of writing the intermediate to reliable storage.
   *
-  * Release: a plain `DataFrame.unpersist` is a CacheManager no-op for
-  * checkpointed frames — the persisted object is the RDD behind the
-  * LogicalRDD leaf, so that is what gets unpersisted (the technique
-  * `Dedup.releaseCheckpoints` established). `releaseAll` is wired into
+  * Release: [[unpersist]] is the one release path for checkpointed
+  * frames in the engine (Dedup, Bpe and Clusters use it too). `releaseAll` is wired into
   * `SparkEntry.clearCaches`; Bench additionally calls it between suite
   * passes so 5 passes do not stack ~20 checkpoints each.
   */
@@ -87,18 +87,27 @@ object Materialize {
     out
   }
 
-  /** Unpersist ONE materialized frame now (localCheckpoint blocks are
-    * executor memory — free them the moment the last consumer is done
-    * rather than at suite teardown). Safe on reliable-checkpoint and
-    * never-checkpointed frames (no LogicalRDD leaf → no-op).
+  /** Unpersist the blocks a checkpointed frame pins: a plain
+    * `DataFrame.unpersist` is a CacheManager no-op for it — the
+    * persisted object is the RDD behind its LogicalRDD leaf. Safe on
+    * reliable-checkpoint and never-checkpointed frames (no LogicalRDD
+    * leaf → no-op) and on a stopped session (errors swallowed: release
+    * is best-effort hygiene, never a query failure).
     */
-  def releaseOne(df: DataFrame): Unit = {
-    tracked.remove(df)
+  def unpersist(df: DataFrame): Unit =
     try df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
-    } catch { case _: Throwable => () } // session may already be stopped
+    } catch { case NonFatal(_) => () }
+
+  /** Unpersist ONE materialized frame now (localCheckpoint blocks are
+    * executor memory — free them the moment the last consumer is done
+    * rather than at suite teardown).
+    */
+  def releaseOne(df: DataFrame): Unit = {
+    tracked.remove(df)
+    unpersist(df)
   }
 
   private def drain(set: java.util.Set[DataFrame]): Unit = {
@@ -106,11 +115,7 @@ object Materialize {
     while (it.hasNext) {
       val df = it.next()
       it.remove()
-      try df.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      } catch { case _: Throwable => () }
+      unpersist(df)
     }
   }
 

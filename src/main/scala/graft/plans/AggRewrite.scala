@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 
 /** Materialized-aggregate rewrite — the planner family every warehouse
@@ -73,13 +73,15 @@ import org.apache.spark.sql.internal.SQLConf
   *   remap is COUNT(DISTINCT mv.x), NULL-skipping on both sides. Any
   *   other DISTINCT aggregate, and every per-aggregate FILTER clause,
   *   declines (not re-aggregable from a plain rollup);
-  * - a SOURCE-STALENESS fingerprint (same discipline as
-  *   AnnIndexRewrite): the MV is a snapshot claim over the source's
-  *   file listing at registration; a changed listing drops the
-  *   registration (droppedStale) and the query scans the facts.
+  * - the MV is a snapshot claim over the source's file listing at
+  *   registration, checked by [[SourceSnapshots]] (the guard all three
+  *   planner rules share): a changed listing drops the registration
+  *   (droppedStale) and the query scans the facts; a join view's one
+  *   snapshot covers both of its sources.
   *
-  * Registration is session-lived, like a temp view; a different live
-  * session scanning the same path keeps its exact plan.
+  * Registration is path-backed (`mvPath`) and session-lived, like a
+  * temp view; a different live session scanning the same path keeps
+  * its exact plan.
   *
   * MV CHOICE (r18): one source may carry SEVERAL summary tables at
   * different granularities (the classic rollup lattice — hourly/daily/
@@ -94,14 +96,16 @@ object AggRewrite extends Rule[LogicalPlan] {
 
   /** A registered summary table for one source path.
     *
-    * @param mv        the materialized rollup frame (or read from mvPath)
+    * @param mv        a read of the materialized rollup at `mvPath`; its
+    *                  session owns the registration
     * @param groupCols the MV's grouping key column names — shared with
     *                  the source scan's column names
     * @param measures  MV measure column name → (func, source column):
     *                  func ∈ count | sum | min | max. ("count", "") is
     *                  COUNT(*); ("count", x) is the per-column count(x)
     *                  — the NULL-ignoring count AVG(x)/COUNT(x) need
-    * @param mvPath    parquet path for fresh-exprId reads per splice
+    * @param mvPath    parquet path of the MV, required by [[register]]:
+    *                  each splice reads it fresh (fresh exprIds)
     * @param rows      MV row count for cost-based choice among several
     *                  registered MVs (counted at registration when < 0)
     */
@@ -116,42 +120,49 @@ object AggRewrite extends Rule[LogicalPlan] {
     * ascending row count among the ones that map the whole query.
     */
   private val registry = TrieMap.empty[String, List[MvSpec]]
-  private val sourceSigs = TrieMap.empty[String, Long]
-  private val staleChecks = TrieMap.empty[String, (Long, Boolean)]
 
   val fired = new java.util.concurrent.atomic.AtomicLong(0)
   val fallbacks = new java.util.concurrent.atomic.AtomicLong(0)
   val droppedStale = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def normalize(path: String): String =
-    new org.apache.hadoop.fs.Path(path).toUri.getPath
+  /** Snapshots of single-table sources (keyed by normalized path) and
+    * of join-view source pairs (keyed by [[joinRegKey]]).
+    */
+  private val snapshots = new SourceSnapshots("agg", droppedStale)
 
-  def register(sourcePath: String, spec: MvSpec): Unit = {
-    require(spec.measures.values.forall(m =>
+  private def requireMeasures(measures: Map[String, (String, String)]): Unit =
+    require(measures.values.forall(m =>
       Seq("count", "sum", "min", "max").contains(m._1)),
       "measure funcs must be count|sum|min|max")
-    val key = normalize(sourcePath)
+
+  /** Register an MV over the parquet source at `sourcePath`. The
+    * source's listing is snapshotted ([[SourceSnapshots]]); a source
+    * that cannot be listed now is refused (warning logged, queries keep
+    * the exact plan).
+    */
+  def register(sourcePath: String, spec: MvSpec): Unit = {
+    requireMeasures(spec.measures)
+    require(spec.mvPath.isDefined, "MvSpec.mvPath is required")
+    val key = SourceSnapshots.normalize(sourcePath)
     // size the MV once for the lattice choice; re-registering the same
     // grouping set replaces its previous spec
     val sized = if (spec.rows >= 0) spec else spec.copy(rows = spec.mv.count())
-    registry.updateWith(key) {
-      case Some(list) =>
-        Some(sized :: list.filterNot(_.groupCols.toSet == sized.groupCols.toSet))
-      case None => Some(List(sized))
+    if (snapshots.snapshot(key, Seq(sourcePath), spec.mv.sparkSession)) {
+      registry.updateWith(key) {
+        case Some(list) =>
+          Some(sized :: list.filterNot(_.groupCols.toSet == sized.groupCols.toSet))
+        case None => Some(List(sized))
+      }
     }
-    try sourceSigs.put(key, sourceSignature(sourcePath, spec))
-    catch { case _: Exception => sourceSigs.remove(key) }
-    staleChecks.remove(key)
   }
 
   def unregister(sourcePath: String): Unit = {
-    val key = normalize(sourcePath)
-    registry.remove(key); sourceSigs.remove(key); staleChecks.remove(key)
+    val key = SourceSnapshots.normalize(sourcePath)
+    registry.remove(key); snapshots.forget(key)
   }
 
   def clear(): Unit = {
-    registry.clear(); sourceSigs.clear(); staleChecks.clear()
-    joinRegistry.clear(); joinSigs.clear(); joinStaleChecks.clear()
+    registry.clear(); joinRegistry.clear(); snapshots.reset()
   }
 
   /** Clear the plan-time staleness verdict caches WITHOUT touching any
@@ -160,74 +171,10 @@ object AggRewrite extends Rule[LogicalPlan] {
     * every plan for a whole check interval, which is exactly the flake
     * the r17 driver run hit.
     */
-  def resetPlanCaches(): Unit = { staleChecks.clear(); joinStaleChecks.clear() }
+  def resetPlanCaches(): Unit = snapshots.resetChecks()
 
   private def enabled: Boolean =
     SQLConf.get.getConfString("spark.graft.agg.rewrite", "true").toBoolean
-
-  private def stalenessIntervalMs: Long =
-    SQLConf.get.getConfString("spark.graft.agg.staleness.intervalMs", "10000").toLong
-
-  /** Order-independent fingerprint of the source file listing — the
-    * same commutative per-file mix as AnnIndexRewrite's guard.
-    */
-  private def sourceSignature(sourcePath: String, spec: MvSpec): Long = {
-    val conf = spec.mv.sparkSession.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(sourcePath)
-    val fs = p.getFileSystem(conf)
-    var acc = 0L
-    def walk(dir: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          if (st.isDirectory) walk(st.getPath)
-          else {
-            var h = 1125899906842597L
-            (st.getPath.toUri.getPath + "|" + st.getLen + "|" + st.getModificationTime)
-              .foreach(c => h = h * 31 + c)
-            acc += h
-          }
-        }
-      }
-    walk(p)
-    acc
-  }
-
-  /** Transient listing failures decline THIS plan (the exact plan is
-    * the safe side — serving from a possibly-stale MV for a whole check
-    * interval is the unsafe one; ADVICE r17) but KEEP the registration
-    * and retry after the interval; only a successful listing that
-    * disagrees with the snapshot drops it permanently — the same
-    * three-way verdict as [[AnnIndexRewrite.sourceIsStale]].
-    */
-  private def sourceIsStale(key: String, path: String, spec: MvSpec): Boolean =
-    sourceSigs.get(key) match {
-      case None => false // unfingerprintable at registration: guard off
-      case Some(sig) =>
-        val now = System.nanoTime()
-        staleChecks.get(key) match {
-          case Some((t, fresh)) if (now - t) / 1000000L < stalenessIntervalMs => !fresh
-          case _ =>
-            val verdict: Option[Boolean] =
-              try Some(sourceSignature(path, spec) == sig)
-              catch { case _: Exception => None } // transient: unknown
-            val fresh = verdict.getOrElse(false)
-            staleChecks.put(key, (now, fresh))
-            verdict match {
-              case Some(false) =>
-                droppedStale.incrementAndGet()
-                logWarning(s"graft agg rewrite: source $path changed since MV " +
-                  "registration — dropping the stale registration (exact plan)")
-                registry.remove(key); sourceSigs.remove(key); staleChecks.remove(key)
-              case None =>
-                logWarning(s"graft agg rewrite: could not re-list $path to verify " +
-                  "MV freshness — keeping the exact plan for this check interval " +
-                  "and retrying (registration kept)")
-              case Some(true) => ()
-            }
-            !fresh
-        }
-    }
 
   // ---- star-schema (join) views ----------------------------------------
 
@@ -235,6 +182,7 @@ object AggRewrite extends Rule[LogicalPlan] {
     * `scan(pathA) ⋈_{leftKey = rightKey} scan(pathB)`. Grouping keys and
     * measure source columns may name columns of either table — names
     * must be unambiguous across the pair (TPC-H-style prefixes).
+    * `mvPath` is required, as for [[MvSpec]].
     */
   final case class JoinMvSpec(
       mv: DataFrame,
@@ -245,94 +193,41 @@ object AggRewrite extends Rule[LogicalPlan] {
       mvPath: Option[String] = None)
 
   private val joinRegistry = TrieMap.empty[String, JoinMvSpec]
-  private val joinSigs = TrieMap.empty[String, Long]
-  private val joinStaleChecks = TrieMap.empty[String, (Long, Boolean)]
 
   private def joinRegKey(a: String, b: String): String = {
-    val s = Seq(normalize(a), normalize(b)).sorted
+    val s = Seq(SourceSnapshots.normalize(a), SourceSnapshots.normalize(b)).sorted
     s.head + "|" + s(1)
   }
 
-  private def signatureOf(path: String, session: SparkSession): Long =
-    sourceSignature(path, MvSpec(session.emptyDataFrame, Nil, Map.empty))
-
+  /** Register a join view over the sources at `pathA` and `pathB`. One
+    * snapshot covers both: a change to either drops the view.
+    */
   def registerJoin(pathA: String, pathB: String, spec: JoinMvSpec): Unit = {
-    require(spec.measures.values.forall(m =>
-      Seq("count", "sum", "min", "max").contains(m._1)),
-      "measure funcs must be count|sum|min|max")
+    requireMeasures(spec.measures)
+    require(spec.mvPath.isDefined, "JoinMvSpec.mvPath is required")
     val key = joinRegKey(pathA, pathB)
-    joinRegistry.put(key, spec)
-    try joinSigs.put(key, signatureOf(pathA, spec.mv.sparkSession) +
-      signatureOf(pathB, spec.mv.sparkSession))
-    catch { case _: Exception => joinSigs.remove(key) }
-    joinStaleChecks.remove(key)
+    if (snapshots.snapshot(key, Seq(pathA, pathB), spec.mv.sparkSession))
+      joinRegistry.put(key, spec)
   }
 
   def unregisterJoin(pathA: String, pathB: String): Unit = {
     val key = joinRegKey(pathA, pathB)
-    joinRegistry.remove(key); joinSigs.remove(key); joinStaleChecks.remove(key)
-  }
-
-  /** Scan root path of a parquet V1 leaf. */
-  private def pathOf(leaf: LogicalPlan): Option[org.apache.hadoop.fs.Path] = leaf match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation => h.location.rootPaths.headOption
-      case _ => None
-    }
-    case _ => None
+    joinRegistry.remove(key); snapshots.forget(key)
   }
 
   /** The registered join view for this leaf PAIR (either order), owned
-    * by the current session and not stale — same checks as [[specOf]],
-    * with BOTH sources fingerprinted (either table changing drops it).
+    * by the current session and not stale — the same checks as
+    * [[specsOf]], over the view's two-path snapshot.
     */
   private def joinSpecOf(leafA: LogicalPlan, leafB: LogicalPlan,
-      cur: Option[SparkSession]): Option[(JoinMvSpec, String, String)] =
+      cur: Option[SparkSession]): Option[JoinMvSpec] =
     for {
-      pa <- pathOf(leafA)
-      pb <- pathOf(leafB)
-      key = joinRegKey(pa.toUri.getPath, pb.toUri.getPath)
+      pa <- SourceSnapshots.scanPath(leafA)
+      pb <- SourceSnapshots.scanPath(leafB)
+      key = joinRegKey(pa, pb)
       spec <- joinRegistry.get(key)
-      if !spec.mv.sparkSession.sparkContext.isStopped || {
-        joinRegistry.remove(key); false
-      }
-      if cur.exists(_ eq spec.mv.sparkSession)
-      if !joinSourcesStale(key, pa.toString, pb.toString, spec)
-    } yield (spec, pa.toString, pb.toString)
-
-  private def joinSourcesStale(key: String, pathA: String, pathB: String,
-      spec: JoinMvSpec): Boolean =
-    joinSigs.get(key) match {
-      case None => false
-      case Some(sig) =>
-        val now = System.nanoTime()
-        joinStaleChecks.get(key) match {
-          case Some((t, fresh)) if (now - t) / 1000000L < stalenessIntervalMs => !fresh
-          case _ =>
-            // same three-way verdict as sourceIsStale: a transient
-            // listing failure declines-but-keeps (exact plan, retry
-            // after the interval); only a verified change drops the view
-            val verdict: Option[Boolean] =
-              try Some(signatureOf(pathA, spec.mv.sparkSession) +
-                signatureOf(pathB, spec.mv.sparkSession) == sig)
-              catch { case _: Exception => None }
-            val fresh = verdict.getOrElse(false)
-            joinStaleChecks.put(key, (now, fresh))
-            verdict match {
-              case Some(false) =>
-                droppedStale.incrementAndGet()
-                logWarning(s"graft agg rewrite: a join-view source ($pathA / $pathB) " +
-                  "changed since registration — dropping the stale view (exact plan)")
-                joinRegistry.remove(key); joinSigs.remove(key); joinStaleChecks.remove(key)
-              case None =>
-                logWarning(s"graft agg rewrite: could not re-list $pathA / $pathB " +
-                  "to verify join-view freshness — keeping the exact plan for this " +
-                  "check interval and retrying (registration kept)")
-              case Some(true) => ()
-            }
-            !fresh
-        }
-    }
+      if snapshots.admits(key, Seq(spec.mv.sparkSession), cur)(joinRegistry.remove(key))
+    } yield spec
 
   private def leafThroughProjects(p: LogicalPlan): LogicalPlan = p match {
     case Project(cols, inner) if cols.forall(_.isInstanceOf[AttributeReference]) =>
@@ -345,28 +240,15 @@ object AggRewrite extends Rule[LogicalPlan] {
     * the whole query). Session-ownership and staleness are per PATH:
     * every MV over the path is a snapshot of the same listing.
     */
-  private def specsOf(leaf: LogicalPlan, cur: Option[SparkSession])
-      : Seq[MvSpec] = leaf match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation =>
-        h.location.rootPaths.headOption.toSeq.flatMap { p =>
-          val key = p.toUri.getPath
-          registry.getOrElse(key, Nil) match {
-            case Nil => Nil
-            case specs if specs.exists(_.mv.sparkSession.sparkContext.isStopped) =>
-              registry.remove(key); Nil
-            case specs if !specs.forall(s => cur.exists(_ eq s.mv.sparkSession)) =>
-              Nil // session-lived registration, like AnnIndexRewrite's
-            case specs if sourceIsStale(key, p.toString, specs.head) =>
-              Nil
-            case specs =>
-              specs.sortBy(s => if (s.rows >= 0) s.rows else Long.MaxValue)
-          }
-        }
-      case _ => Nil
+  private def specsOf(leaf: LogicalPlan, cur: Option[SparkSession]): Seq[MvSpec] =
+    SourceSnapshots.scanPath(leaf).toSeq.flatMap { key =>
+      registry.getOrElse(key, Nil) match {
+        case Nil => Nil
+        case specs if !snapshots.admits(key, specs.map(_.mv.sparkSession), cur)(
+            registry.remove(key)) => Nil
+        case specs => specs.sortBy(s => if (s.rows >= 0) s.rows else Long.MaxValue)
+      }
     }
-    case _ => Nil
-  }
 
   /** True when every IEEE-reassociation hazard is absent: integral
     * types re-sum exactly; float/double re-sums reorder additions.
@@ -377,8 +259,8 @@ object AggRewrite extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def rewriteAggregate(agg: Aggregate, cur: Option[SparkSession],
-      dfGuard: () => Boolean): Option[Aggregate] = {
+  private def rewriteAggregate(agg: Aggregate,
+      cur: Option[SparkSession]): Option[Aggregate] = {
     // optional deterministic Filter BETWEEN the Aggregate and the scan:
     // re-aggregable iff it references ONLY MV grouping keys (then the
     // same predicate applied to the MV keeps exactly the fact rows'
@@ -394,8 +276,8 @@ object AggRewrite extends Rule[LogicalPlan] {
         // MV missing a key/measure is skipped, never wrong. Fallback is
         // counted once per query (no MV maps), not per skipped trial.
         val chosen = specs.view.flatMap { spec =>
-          rewriteWith(agg, spec.groupCols, spec.measures, spec.mv, spec.mvPath,
-            fltOpt, s"single-table(${spec.rows}-row MV)", dfGuard)
+          rewriteWith(agg, spec.groupCols, spec.measures, spec.mv.sparkSession,
+            spec.mvPath.get, fltOpt)
         }.headOption
         if (chosen.isEmpty && specs.nonEmpty) fallbacks.incrementAndGet()
         chosen
@@ -428,7 +310,7 @@ object AggRewrite extends Rule[LogicalPlan] {
           }
         val (leafL, strippedL) = splitNotNull(lc)
         val (leafR, strippedR) = splitNotNull(rc)
-        joinSpecOf(leafL, leafR, cur).flatMap { case (spec, pathL, pathR) =>
+        joinSpecOf(leafL, leafR, cur).flatMap { spec =>
           val keys = Set(spec.leftKey, spec.rightKey)
           val keyOk = cond match {
             case EqualTo(x: AttributeReference, y: AttributeReference) =>
@@ -437,8 +319,8 @@ object AggRewrite extends Rule[LogicalPlan] {
           }
           if (!keyOk || !(strippedL ++ strippedR).forall(keys.contains)) None
           else {
-            val res = rewriteWith(agg, spec.groupCols, spec.measures, spec.mv,
-              spec.mvPath, fltOpt, s"join(${spec.leftKey}=${spec.rightKey})", dfGuard)
+            val res = rewriteWith(agg, spec.groupCols, spec.measures,
+              spec.mv.sparkSession, spec.mvPath.get, fltOpt)
             if (res.isEmpty) fallbacks.incrementAndGet()
             res
           }
@@ -448,7 +330,7 @@ object AggRewrite extends Rule[LogicalPlan] {
       // from the MV by replicating each MV row instead (every grouping
       // set is a coarsening of the MV's keys, so the per-set groups
       // re-aggregate exactly like the flat shape does per query).
-      case e: Expand => rewriteExpand(agg, e, cur, dfGuard)
+      case e: Expand => rewriteExpand(agg, e, cur)
       case _ => None
     }
   }
@@ -479,7 +361,7 @@ object AggRewrite extends Rule[LogicalPlan] {
     * costing 2^k fact scans' worth of shuffle and costing nothing.
     */
   private def rewriteExpand(agg: Aggregate, expand: Expand,
-      cur: Option[SparkSession], dfGuard: () => Boolean): Option[Aggregate] = {
+      cur: Option[SparkSession]): Option[Aggregate] = {
     val (fltOpt, below) = leafThroughProjects(expand.child) match {
       case f @ Filter(_, c) => (Some(f), leafThroughProjects(c))
       case other => (None, other)
@@ -488,7 +370,7 @@ object AggRewrite extends Rule[LogicalPlan] {
       case leaf: LogicalRelation =>
         val specs = specsOf(leaf, cur)
         val chosen = specs.view.flatMap { spec =>
-          rewriteExpandWith(agg, expand, spec, fltOpt, dfGuard)
+          rewriteExpandWith(agg, expand, spec, fltOpt)
         }.headOption
         if (chosen.isEmpty && specs.nonEmpty) fallbacks.incrementAndGet()
         chosen
@@ -497,7 +379,7 @@ object AggRewrite extends Rule[LogicalPlan] {
   }
 
   private def rewriteExpandWith(agg: Aggregate, expand: Expand, spec: MvSpec,
-      fltOpt: Option[Filter], dfGuard: () => Boolean): Option[Aggregate] = {
+      fltOpt: Option[Filter]): Option[Aggregate] = {
     if (expand.projections.isEmpty) return None
     // grouping must be plain references to Expand outputs (the lowered
     // form always is; anything else is not the shape this serves)
@@ -507,9 +389,7 @@ object AggRewrite extends Rule[LogicalPlan] {
     }) return None
     val groupingIds = AttributeSet(agg.groupingExpressions.flatMap(_.references))
 
-    val spark = spec.mv.sparkSession
-    val mvDf = spec.mvPath.map(spark.read.parquet(_)).getOrElse(spec.mv)
-    val mvPlan = EliminateSubqueryAliases(mvDf.queryExecution.analyzed)
+    val mvPlan = readMv(spec.mv.sparkSession, spec.mvPath.get)
     def mvAttr(name: String): Option[Attribute] =
       mvPlan.output.find(_.name == name)
 
@@ -633,7 +513,6 @@ object AggRewrite extends Rule[LogicalPlan] {
         Filter(cond2, mvPlan)
     }
 
-    if (spec.mvPath.isEmpty && !dfGuard()) return None
     fired.incrementAndGet()
     logInfo(s"graft agg rewrite: grouping-sets Aggregate (${expand.projections.length} " +
       s"sets) answered from the ${spec.rows}-row MV — fact Expand replaced")
@@ -735,14 +614,19 @@ object AggRewrite extends Rule[LogicalPlan] {
     }
   }
 
+  /** A fresh read of the MV at `mvPath`: fresh exprIds per splice, so
+    * two Aggregates in one plan never share an MV subtree.
+    */
+  private def readMv(spark: SparkSession, mvPath: String): LogicalPlan =
+    EliminateSubqueryAliases(spark.read.parquet(mvPath).queryExecution.analyzed)
+
   /** The shared output-mapping core: remap an Aggregate's grouping
     * keys, measures, and optional key-only Filter onto the view, or
     * decline.
     */
   private def rewriteWith(agg: Aggregate, groupCols: Seq[String],
-      measures: Map[String, (String, String)], mv: DataFrame,
-      mvPath: Option[String], fltOpt: Option[Filter], logTag: String,
-      dfGuard: () => Boolean): Option[Aggregate] = {
+      measures: Map[String, (String, String)], spark: SparkSession,
+      mvPath: String, fltOpt: Option[Filter]): Option[Aggregate] = {
     {
       // grouping keys: plain scan columns, a subset of the MV keys
       val groupAttrs = agg.groupingExpressions.map {
@@ -756,15 +640,7 @@ object AggRewrite extends Rule[LogicalPlan] {
         if (!refs.forall(a => groupCols.contains(a.name)))
           return None // predicate touches a measure column: not derivable
       }
-      // the MV plan — path-backed reads splice fresh exprIds each time;
-      // a DataFrame-backed spec can be spliced ONCE PER PASS (ADVICE
-      // r17: the guard must span the whole transformDown — two
-      // Aggregates over the same source in one plan would otherwise
-      // splice duplicate exprIds into sibling subtrees; the guard's
-      // initial state also covers attrs already in the tree)
-      val spark = mv.sparkSession
-      val mvDf = mvPath.map(spark.read.parquet(_)).getOrElse(mv)
-      val mvPlan = EliminateSubqueryAliases(mvDf.queryExecution.analyzed)
+      val mvPlan = readMv(spark, mvPath)
       def mvAttr(name: String): Option[Attribute] =
         mvPlan.output.find(_.name == name)
       // map every output expression or decline
@@ -817,12 +693,6 @@ object AggRewrite extends Rule[LogicalPlan] {
       // succeeds on its second-smallest MV is not miscounted as a miss
       if (mapped.exists(_.isEmpty) || !condOk) {
         None
-      } else if (mvPath.isEmpty && !dfGuard()) {
-        // a DataFrame-backed MV was already spliced into this plan (or
-        // its attrs pre-exist in the tree): a second splice would
-        // duplicate exprIds — keep the exact plan (burned only on an
-        // actual fire, so declined matches don't consume the slot)
-        None
       } else {
         fired.incrementAndGet()
         logInfo(s"graft agg rewrite: Aggregate over ${groupCols.size}-key MV " +
@@ -833,33 +703,14 @@ object AggRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** Output attrs of every DataFrame-backed MV (path-backed specs read
-    * fresh exprIds per splice and need no guard) — the initial state of
-    * the once-per-pass splice guard.
-    */
-  private def dfMvAttrs(): AttributeSet = {
-    val dfs = registry.values.flatten.filter(_.mvPath.isEmpty).map(_.mv) ++
-      joinRegistry.values.filter(_.mvPath.isEmpty).map(_.mv)
-    dfs.foldLeft(AttributeSet.empty)((acc, df) =>
-      acc ++ df.queryExecution.analyzed.outputSet)
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan =
     applyWith(plan, SparkSession.getActiveSession)
 
   def applyWith(plan: LogicalPlan, cur: Option[SparkSession]): LogicalPlan = {
     if (!enabled || (registry.isEmpty && joinRegistry.isEmpty)) return plan
-    // once-per-PASS splice guard for DataFrame-backed MVs (ADVICE r17):
-    // a single analyzed MV subtree spliced under two sibling Aggregates
-    // would duplicate its exprIds across the plan. Seeded with a
-    // plan-wide attr scan (covers MV attrs already in the tree), burned
-    // by the first fire, checked by every subsequent match.
-    var dfSpliced = plan.collectLeaves()
-      .exists(l => l.outputSet.intersect(dfMvAttrs()).nonEmpty)
-    def dfGuard(): Boolean = { val ok = !dfSpliced; if (ok) dfSpliced = true; ok }
     plan.transformDown {
       case agg: Aggregate =>
-        try rewriteAggregate(agg, cur, dfGuard _).getOrElse(agg)
+        try rewriteAggregate(agg, cur).getOrElse(agg)
         catch {
           case e: Exception =>
             logWarning(s"graft agg rewrite failed; keeping the exact plan: ${e.getMessage}")

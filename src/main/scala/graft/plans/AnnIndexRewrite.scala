@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
@@ -134,7 +133,9 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * raw vectors, or "cosine" over L2-normalized copies (see the
     * class doc). `exhaustiveProbe` declares that nprobe covers every
     * cell and efSearch exceeds every cell size — the precondition for
-    * the filtered rewrites' exactness argument.
+    * the filtered rewrites' exactness argument. `indexPath` is the
+    * stored index's parquet path, required by [[register]]; `index` is
+    * a read of it, whose session owns the registration.
     */
   final case class IndexSpec(
       index: DataFrame,
@@ -160,42 +161,42 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     */
   private val registry = TrieMap.empty[String, IndexSpec]
 
-  def normalize(path: String): String =
-    new org.apache.hadoop.fs.Path(path).toUri.getPath
-
   private val Metrics = Seq("l2", "cosine", "ip")
 
   private def regKey(path: String, metric: String): String =
-    normalize(path) + "#" + metric
+    SourceSnapshots.normalize(path) + "#" + metric
 
+  /** Register `spec` as the `spec.metric` index of the parquet source
+    * at `sourcePath`. The index must be path-backed (`indexPath`): each
+    * splice reads it fresh, so two patterns in one plan never share
+    * exprIds. The index is a snapshot of the source's content — the
+    * exactness contract (candidates ⊇ true top-k at exhaustive knobs)
+    * only holds while the source IS that snapshot, so the source's
+    * listing is fingerprinted now and re-checked at plan time
+    * ([[SourceSnapshots]]); a source that cannot be listed now is
+    * refused (warning logged, queries keep the exact plan).
+    */
   def register(sourcePath: String, spec: IndexSpec): Unit = {
     require(Metrics.contains(spec.metric), s"unknown metric '${spec.metric}'")
+    require(spec.indexPath.isDefined, "IndexSpec.indexPath is required")
     val key = regKey(sourcePath, spec.metric)
-    registry.put(key, spec)
-    // Freeze the source's file listing AT registration: the index is a
-    // snapshot of the table's content, and the exactness contract
-    // (candidates ⊇ true top-k at exhaustive knobs) only holds while
-    // the table IS that snapshot. See [[sourceIsStale]]. An
-    // unfingerprintable source (exotic scheme, listing error) keeps the
-    // guard OFF for that registration rather than blocking it.
-    try sourceSigs.put(key, sourceSignature(sourcePath, spec))
-    catch { case _: Exception => sourceSigs.remove(key) }
-    staleChecks.remove(key)
-    invalidateProbeCaches()
+    if (snapshots.snapshot(key, Seq(sourcePath), spec.index.sparkSession)) {
+      registry.put(key, spec)
+      invalidateProbeCaches()
+    }
   }
 
   def unregister(sourcePath: String): Unit = {
     Metrics.foreach { m =>
       val key = regKey(sourcePath, m)
       registry.remove(key)
-      sourceSigs.remove(key)
-      staleChecks.remove(key)
+      snapshots.forget(key)
     }
     invalidateProbeCaches()
   }
 
   def clear(): Unit = {
-    registry.clear(); sourceSigs.clear(); staleChecks.clear()
+    registry.clear(); snapshots.reset()
     invalidateProbeCaches()
   }
 
@@ -207,106 +208,14 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * retry. Dropping these entries costs a re-list + re-probe, never
     * correctness.
     */
-  def resetPlanCaches(): Unit = { staleChecks.clear(); invalidateProbeCaches() }
-
-  // ---- source staleness guard ----------------------------------------
-  // A registration is a SNAPSHOT claim: splicing an index probe into a
-  // scan whose files changed since registration would silently drop new
-  // rows (or resurrect deleted ones) from a query whose exact plan would
-  // see them — the one way the "acceleration never changes results"
-  // contract can break without any code being wrong. The guard
-  // fingerprints the source's file listing (path, length, modTime per
-  // file) at registration and revalidates lazily at plan time, at most
-  // once per `spark.graft.ann.staleness.intervalMs` (default 10 s) per
-  // registration — at 100 TB a table may hold 10⁵ files and listing on
-  // EVERY plan event would be the new bottleneck. A stale registration
-  // self-heals: it is dropped (warn logged) and the query runs the
-  // exact plan, mirroring the stopped-session cleanup above.
-  private val sourceSigs = TrieMap.empty[String, Long]
-  // key → (lastCheckedNanos, wasFresh)
-  private val staleChecks = TrieMap.empty[String, (Long, Boolean)]
+  def resetPlanCaches(): Unit = { snapshots.resetChecks(); invalidateProbeCaches() }
 
   /** Observability: registrations dropped because their source files
     * changed after registration (the staleness self-heal).
     */
   val droppedStale = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def stalenessIntervalMs: Long =
-    SQLConf.get.getConfString("spark.graft.ann.staleness.intervalMs", "10000").toLong
-
-  /** Order-independent fingerprint of the source directory's file
-    * listing. Hidden/metadata files (`_SUCCESS`, `.crc`) are excluded —
-    * committers rewrite them without touching data.
-    */
-  private def sourceSignature(sourcePath: String, spec: IndexSpec): Long = {
-    val conf = spec.index.sparkSession.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(sourcePath)
-    val fs = p.getFileSystem(conf)
-    var acc = 0L
-    def walk(dir: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          if (st.isDirectory) walk(st.getPath)
-          else {
-            // commutative mix (sum of per-file hashes): listing order
-            // must not matter
-            var h = 1125899906842597L
-            (st.getPath.toUri.getPath + "|" + st.getLen + "|" + st.getModificationTime)
-              .foreach(c => h = h * 31 + c)
-            acc += h
-          }
-        }
-      }
-    walk(p)
-    acc
-  }
-
-  /** True (and, on a VERIFIED change, self-heals the registry) when the
-    * source's current file listing no longer matches the
-    * registration-time snapshot. `sourcePath` must be the scan's FULL
-    * path (scheme + authority intact — the registry key is
-    * scheme-stripped, but listing a scheme-stripped path against the
-    * default FileSystem would misresolve s3a/hdfs sources).
-    *
-    * Transient listing failures (a 503, a race with a concurrent
-    * committer) decline THIS plan — the exact plan is the safe side —
-    * but KEEP the registration and retry after the check interval;
-    * only a successful listing that disagrees with the snapshot drops
-    * the registration permanently.
-    */
-  private def sourceIsStale(key: String, sourcePath: String, spec: IndexSpec): Boolean = {
-    val now = System.nanoTime()
-    val intervalNs = stalenessIntervalMs * 1000000L
-    staleChecks.get(key) match {
-      case Some((t, fresh)) if now - t < intervalNs => !fresh
-      case _ =>
-        val verdict: Option[Boolean] = sourceSigs.get(key) match {
-          case None => Some(true) // unfingerprintable at registration: guard off
-          case Some(sig) =>
-            try Some(sourceSignature(sourcePath, spec) == sig)
-            catch { case _: Exception => None } // transient: unknown
-        }
-        val fresh = verdict.getOrElse(false)
-        staleChecks.put(key, (now, fresh))
-        verdict match {
-          case Some(false) =>
-            registry.remove(key)
-            sourceSigs.remove(key)
-            invalidateProbeCaches()
-            droppedStale.incrementAndGet()
-            logWarning(s"graft ANN rewrite: source files under $sourcePath changed " +
-              "after index registration — dropping the registration and keeping " +
-              "the exact plan (re-register after rebuilding the index)")
-          case None =>
-            logWarning(s"graft ANN rewrite: could not re-list $sourcePath to " +
-              "verify index freshness — keeping the exact plan for this check " +
-              "interval and retrying (registration kept)")
-          case Some(true) => ()
-        }
-        !fresh
-    }
-  }
+  private val snapshots = new SourceSnapshots("ANN", droppedStale)
 
   /** Count of rewrites applied in this JVM — observability for specs
     * and operators (a registered index that never fires is a config
@@ -369,8 +278,11 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     probeDecisions.getOrElseUpdate(key, compute)
   }
 
-  private def specCacheKey(spec: IndexSpec): String =
-    spec.indexPath.getOrElse("df@" + System.identityHashCode(spec.index))
+  /** A fresh read of the registered index: fresh relation attrs per
+    * splice, so several patterns in one plan never share exprIds.
+    */
+  private def readIndex(spec: IndexSpec): DataFrame =
+    spec.index.sparkSession.read.parquet(spec.indexPath.get)
 
   private def enabled: Boolean =
     SQLConf.get.getConfString("spark.graft.ann.rewrite", "true").toBoolean
@@ -388,15 +300,10 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     BigInt(SQLConf.get.getConfString(
       "spark.graft.ann.batchRewrite.minScanBytes", "67108864"))
 
-  /** Log-once flag for the no-current-session decline (ADVICE r15: an
-    * invisible perf cliff should at least log its first occurrence).
-    */
-  private val warnedNoSession = new java.util.concurrent.atomic.AtomicBoolean(false)
-
   /** The scan's registered spec for `metric`, if any, owned by the
-    * current session. V1 parquet path only — that is what
-    * `spark.read.parquet` yields under the default
-    * `spark.sql.sources.useV1SourceList`.
+    * current session and still a snapshot of the scan's source
+    * ([[SourceSnapshots.admits]]; a stale or orphaned registration is
+    * dropped there and the query keeps the exact plan).
     *
     * `cur` is the session the plan is being optimized FOR: the
     * session-bound [[AnnIndexRewriteRule]] passes its injected session
@@ -405,45 +312,15 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * thread-local active session.
     */
   private def specOf(leaf: LogicalPlan, metric: String,
-      cur: Option[SparkSession]): Option[IndexSpec] = leaf match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation =>
-        h.location.rootPaths.headOption.flatMap { p =>
-          val key = p.toUri.getPath + "#" + metric
-          registry.get(key).flatMap { spec =>
-            // a registration outlives its owning session only as a bug:
-            // handing a stopped session's DataFrame to a live query
-            // would fail at execution. Self-heal by dropping it — the
-            // query falls back to the exact plan (the rule's contract).
-            if (spec.index.sparkSession.sparkContext.isStopped) {
-              registry.remove(key); None
-            } else if (cur.isEmpty) {
-              if (warnedNoSession.compareAndSet(false, true)) {
-                logWarning("graft ANN rewrite: no current session to check " +
-                  "registration ownership against; keeping the exact plan " +
-                  "(register via a session built withExtensions(GraftExtensions) " +
-                  "to bind the rule to its session)")
-              }
-              None
-            } else if (!cur.exists(_ eq spec.index.sparkSession)) {
-              // registration is SESSION-lived (like a temp view), but the
-              // registry is JVM-global keyed by path: a DIFFERENT live
-              // session scanning the same path must not get this
-              // session's analyzed index subtree spliced into its plan —
-              // it keeps the exact path (correct, just unaccelerated).
-              None
-            } else if (sourceIsStale(key, p.toString, spec)) {
-              // source files changed since registration: the index is a
-              // stale snapshot and splicing it would drop/resurrect rows
-              // the exact plan sees — self-healed inside sourceIsStale
-              None
-            } else Some(spec)
-          }
+      cur: Option[SparkSession]): Option[IndexSpec] =
+    SourceSnapshots.scanPath(leaf).flatMap { p =>
+      val key = p + "#" + metric
+      registry.get(key).filter { spec =>
+        snapshots.admits(key, Seq(spec.index.sparkSession), cur) {
+          registry.remove(key); invalidateProbeCaches()
         }
-      case _ => None
+      }
     }
-    case _ => None
-  }
 
   private def stripCasts(e: Expression): Expression = e match {
     case c: Cast => stripCasts(c.child)
@@ -584,9 +461,9 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     * `Sort(dist ASC) → Project → (Scan ⋉ probe)`, or None if the shape
     * / registration / sort key doesn't qualify.
     */
-  private def rewriteSort(srt: Sort, k: Int, guard: IndexSpec => Boolean,
+  private def rewriteSort(srt: Sort, k: Int,
       cur: Option[SparkSession]): Option[Sort] =
-    try rewriteSortUnsafe(srt, k, guard, cur)
+    try rewriteSortUnsafe(srt, k, cur)
     catch {
       // The planner contract: a failed ACCELERATION attempt (corrupt
       // index files, a mid-flight dropped registration, an unexpected
@@ -641,7 +518,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                 val spark = spec.index.sparkSession
                 val kp = math.max(k, 1) * math.max(spec.overfetch, 1) *
                   math.max(spec.filteredOverfetch, 1)
-                val cacheKey = s"${specCacheKey(spec)}|flt|$metric|k=$k|" +
+                val cacheKey = s"${spec.indexPath.get}|flt|$metric|k=$k|" +
                   // keyed on the condition's SQL text, not its
                   // canonicalized tree: Expression.canonicalized retains
                   // attr exprIds, so a FRESH Dataset of the same shape
@@ -653,9 +530,8 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                   s"qv=${qv.mkString(",")}|cond=${flt.condition.sql}"
                 val decision = memoProbe(cacheKey)({
                   import spark.implicits._
-                  val idx = spec.indexPath.map(spark.read.parquet(_)).getOrElse(spec.index)
                   val candIds = graft.search.Hnsw.searchRoutedIndex(
-                    spark, Seq((0L, qv)).toDF("qid", "qemb"), idx, spec.centroids,
+                    spark, Seq((0L, qv)).toDF("qid", "qemb"), readIndex(spec), spec.centroids,
                     k = kp, nprobe = spec.nprobe, efSearch = spec.efSearch,
                     idCol = spec.idCol, embCol = spec.embCol)
                     .select(spec.idCol).collect().map(_.get(0)).toIndexedSeq
@@ -693,7 +569,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  private def rewriteSortUnsafe(srt: Sort, k: Int, guard: IndexSpec => Boolean,
+  private def rewriteSortUnsafe(srt: Sort, k: Int,
       cur: Option[SparkSession]): Option[Sort] = srt match {
     case Sort(SortOrder(key, Ascending, _, _) +: _, true,
         p @ Project(projList, flt @ Filter(_, _)), _) =>
@@ -701,22 +577,15 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     case Sort(SortOrder(key, Ascending, _, _) +: _, true,
         p @ Project(projList, leaf), _) =>
       queryVectorOf(key, projList).flatMap { case (qv, embAttr, metric) =>
-        specOf(leaf, metric, cur).filter(guard).flatMap { spec =>
+        specOf(leaf, metric, cur).flatMap { spec =>
           leaf.output.find(_.name == spec.idCol) match {
             case Some(leftId)
                 if leaf.outputSet.contains(embAttr) && embAttr.name == spec.embCol =>
               val spark = spec.index.sparkSession
               import spark.implicits._
-              // exprId hygiene for MULTIPLE patterns in one query: a
-              // path-backed spec splices a FRESH read per rewrite (fresh
-              // relation attrs every time); a DataFrame-backed spec can
-              // only be spliced once per plan — if its attrs are already
-              // in the tree, this match keeps the exact plan (never
-              // wrong, only unaccelerated).
-              val idx = spec.indexPath.map(spark.read.parquet(_)).getOrElse(spec.index)
               val probe = graft.search.Hnsw.searchRoutedIndex(
                 spark, Seq((0L, qv)).toDF("qid", "qemb"),
-                idx, spec.centroids,
+                readIndex(spec), spec.centroids,
                 k = math.max(k, 1) * math.max(spec.overfetch, 1),
                 nprobe = spec.nprobe, efSearch = spec.efSearch,
                 idCol = spec.idCol, embCol = spec.embCol)
@@ -961,7 +830,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                   case (scanSide, querySide, spec, qembAttr, idAttr, fltOpt) =>
                     val spark = spec.index.sparkSession
                     val filtered = fltOpt.isDefined
-                    val cacheKey = s"${specCacheKey(spec)}|batch|$metric|k=$k|" +
+                    val cacheKey = s"${spec.indexPath.get}|batch|$metric|k=$k|" +
                       s"q=${querySide.canonicalized}|" +
                       s"cond=${fltOpt.map(_.condition.sql).getOrElse("")}"
                     val decision = memoProbe(cacheKey)({
@@ -1012,10 +881,8 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
                       } else {
                         val kp = math.max(k, 1) * math.max(spec.overfetch, 1) *
                           (if (filtered) math.max(spec.filteredOverfetch, 1) else 1)
-                        val idx = spec.indexPath.map(spark.read.parquet(_))
-                          .getOrElse(spec.index)
                         val probe = graft.search.Hnsw.searchRoutedIndex(
-                          spark, qdfProbe, idx, spec.centroids,
+                          spark, qdfProbe, readIndex(spec), spec.centroids,
                           k = kp, nprobe = spec.nprobe, efSearch = spec.efSearch,
                           idCol = spec.idCol, embCol = spec.embCol)
                         // Collected once for BOTH branches: the per-query
@@ -1098,16 +965,6 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** A DataFrame-backed spec's index attrs, for the spliced-once guard
-    * (a path-backed spec reads fresh attrs per splice and needs none).
-    */
-  private def dfSpecAttrs(): org.apache.spark.sql.catalyst.expressions.AttributeSet = {
-    val specs = registry.values.filter(_.indexPath.isEmpty)
-    specs.foldLeft(org.apache.spark.sql.catalyst.expressions.AttributeSet.empty) {
-      (acc, sp) => acc ++ sp.index.queryExecution.analyzed.outputSet
-    }
-  }
-
   /** The bare object remains a usable Rule (specs apply it directly;
     * `spark.experimental.extraOptimizations` users too) — it falls back
     * to the THREAD-LOCAL active session for the ownership check. The
@@ -1120,19 +977,10 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
 
   def applyWith(plan: LogicalPlan, cur: Option[SparkSession]): LogicalPlan = {
     if (!enabled || registry.isEmpty) return plan
-    // exprId hygiene: a DataFrame-backed spec holds ONE analyzed index
-    // subtree, so splicing it twice into one plan would duplicate its
-    // exprIds (attribute-binding corruption). If its attrs are already
-    // anywhere in this plan, further matches keep the exact path.
-    // Path-backed specs are immune — each splice reads fresh.
-    var dfSpliced = plan.collectLeaves()
-      .exists(l => l.outputSet.intersect(dfSpecAttrs()).nonEmpty)
-    def guardDf(spec: IndexSpec): Boolean =
-      spec.indexPath.isDefined || { val ok = !dfSpliced; if (ok) dfSpliced = true; ok }
     plan.transformDown {
       // the analyzed shape: Limit directly over the Sort
       case gl @ GlobalLimit(IntegerLiteral(k), ll @ LocalLimit(_, srt: Sort)) =>
-        rewriteSort(srt, k, guardDf, cur)
+        rewriteSort(srt, k, cur)
           .map(ns => gl.copy(child = ll.copy(child = ns)))
           .getOrElse(gl)
       // after projection pushdown the optimizer moves row-preserving
@@ -1142,7 +990,7 @@ object AnnIndexRewrite extends Rule[LogicalPlan] {
       case gl @ GlobalLimit(IntegerLiteral(k),
           ll @ LocalLimit(_, mid @ Project(midList, srt: Sort)))
           if midList.forall(_.deterministic) =>
-        rewriteSort(srt, k, guardDf, cur)
+        rewriteSort(srt, k, cur)
           .map(ns => gl.copy(child = ll.copy(child = mid.copy(child = ns))))
           .getOrElse(gl)
       // the BATCH shape: rank-filtered row_number window over a

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 
 /** Constraint-based JOIN ELIMINATION — the third planner family, next
@@ -77,11 +77,12 @@ import org.apache.spark.sql.internal.SQLConf
   *  - LEFT OUTER (dim on the right; RIGHT OUTER mirrored) requires
   *    only dim-key uniqueness — NULL or dangling fact keys are kept
   *    null-extended, and the nulls land in columns nobody reads;
-  *  - verified claims are SNAPSHOTS: both paths carry the same
-  *    file-listing fingerprint discipline as the other families — a
-  *    changed listing drops every claim on the path (droppedStale), a
-  *    transient listing failure declines this plan but keeps the
-  *    registration for retry after the interval.
+  *  - verified claims are SNAPSHOTS of both paths' file listings,
+  *    checked by [[SourceSnapshots]] (the guard all three planner rules
+  *    share) — a changed listing drops every claim on the path
+  *    (droppedStale), a transient listing failure declines this plan
+  *    but keeps the registration for retry after the interval, and a
+  *    path that cannot be listed at registration is refused.
   *
   * Registration is session-lived, like a temp view: every claim
   * records its registering session, and BOTH claim kinds are usable
@@ -118,20 +119,21 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private val uniques = TrieMap.empty[String, UniqueSpec] // normalized dim path
   private val fks = TrieMap.empty[(String, String), FkSpec] // (fact path, fact col)
-  private val sigs = TrieMap.empty[String, Long] // per-path listing snapshot
-  private val staleChecks = TrieMap.empty[String, (Long, Boolean)]
 
   val fired = new java.util.concurrent.atomic.AtomicLong(0)
   val fallbacks = new java.util.concurrent.atomic.AtomicLong(0)
   val droppedStale = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def normalize(path: String): String =
-    new org.apache.hadoop.fs.Path(path).toUri.getPath
+  /** One listing snapshot per normalized path, shared by both claim
+    * kinds (the dim path of a unique claim, the fact path of an FK).
+    */
+  private val snapshots = new SourceSnapshots("constraint", droppedStale)
 
   /** Verify `keyCol` unique (no duplicate non-NULL value) in the
     * parquet at `dimPath`, then register the claim. Refuses a column
     * the data disproves — a trusted-but-wrong uniqueness claim would
-    * let the rule keep duplicated fact rows that the real join dedups.
+    * let the rule keep duplicated fact rows that the real join dedups —
+    * and a path whose listing cannot be snapshotted (warning logged).
     */
   def registerUnique(spark: SparkSession, dimPath: String, keyCol: String): Unit = {
     val dim = spark.read.parquet(dimPath)
@@ -140,11 +142,9 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     require(r.getLong(1) == r.getLong(2),
       s"registerUnique refused: $dimPath.$keyCol has ${r.getLong(1) - r.getLong(2)} " +
         "duplicate non-NULL values")
-    val key = normalize(dimPath)
-    uniques.put(key, UniqueSpec(spark, keyCol, noNulls = r.getLong(0) == r.getLong(1)))
-    try sigs.put(key, sourceSignature(spark, dimPath))
-    catch { case _: Exception => sigs.remove(key) }
-    staleChecks.remove(key)
+    val key = SourceSnapshots.normalize(dimPath)
+    if (snapshots.snapshot(key, Seq(dimPath), spark))
+      uniques.put(key, UniqueSpec(spark, keyCol, noNulls = r.getLong(0) == r.getLong(1)))
   }
 
   /** Verify the referential-integrity claim — zero NULL `factCol`
@@ -154,7 +154,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     */
   def registerForeignKey(spark: SparkSession, factPath: String, factCol: String,
       dimPath: String, dimCol: String): Unit = {
-    val dimKey = normalize(dimPath)
+    val dimKey = SourceSnapshots.normalize(dimPath)
     require(uniques.get(dimKey).exists(_.keyCol == dimCol),
       s"registerForeignKey requires registerUnique($dimPath, $dimCol) first")
     val fact = spark.read.parquet(factPath)
@@ -165,52 +165,22 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
       .limit(1).count()
     require(dangling == 0,
       s"registerForeignKey refused: $factPath.$factCol has values absent from $dimPath.$dimCol")
-    val factKey = normalize(factPath)
-    fks.put((factKey, factCol), FkSpec(spark, factKey, factCol, dimKey, dimCol))
-    try sigs.put(factKey, sourceSignature(spark, factPath))
-    catch { case _: Exception => sigs.remove(factKey) }
-    staleChecks.remove(factKey)
+    val factKey = SourceSnapshots.normalize(factPath)
+    if (snapshots.snapshot(factKey, Seq(factPath), spark))
+      fks.put((factKey, factCol), FkSpec(spark, factKey, factCol, dimKey, dimCol))
   }
 
-  def unregister(path: String): Unit = dropClaimsOn(normalize(path))
+  def unregister(path: String): Unit = dropClaimsOn(SourceSnapshots.normalize(path))
 
-  def clear(): Unit = { uniques.clear(); fks.clear(); sigs.clear(); staleChecks.clear() }
+  def clear(): Unit = { uniques.clear(); fks.clear(); snapshots.reset() }
 
   /** Clear plan-time staleness verdicts without touching registrations
     * — the [[PlannerPin]] retry-once hook, same as the sibling rules.
     */
-  def resetPlanCaches(): Unit = staleChecks.clear()
+  def resetPlanCaches(): Unit = snapshots.resetChecks()
 
   private def enabled: Boolean =
     SQLConf.get.getConfString("spark.graft.constraint.rewrite", "true").toBoolean
-
-  private def stalenessIntervalMs: Long =
-    SQLConf.get.getConfString("spark.graft.constraint.staleness.intervalMs", "10000").toLong
-
-  /** Order-independent fingerprint of the path's file listing — the
-    * shared commutative per-file mix of the other two families.
-    */
-  private def sourceSignature(spark: SparkSession, path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    var acc = 0L
-    def walk(dir: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          if (st.isDirectory) walk(st.getPath)
-          else {
-            var h = 1125899906842597L
-            (st.getPath.toUri.getPath + "|" + st.getLen + "|" + st.getModificationTime)
-              .foreach(c => h = h * 31 + c)
-            acc += h
-          }
-        }
-      }
-    walk(p)
-    acc
-  }
 
   /** Every claim involving the path is a snapshot of its listing:
     * unique claims ON it, FK claims FROM it (fact grew — a new row may
@@ -222,51 +192,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     fks.filterInPlace { case (_, spec) =>
       spec.factPath != key && spec.dimPath != key
     }
-    sigs.remove(key); staleChecks.remove(key)
-  }
-
-  /** Three-way staleness verdict per path, shared by both claim kinds:
-    * fresh (proceed), verified-changed (drop every claim on the path),
-    * transient-unknown (decline this plan, keep the claims, retry
-    * after the interval).
-    */
-  private def pathIsStale(session: SparkSession, key: String, path: String): Boolean =
-    sigs.get(key) match {
-      case None => false // unfingerprintable at registration: guard off
-      case Some(sig) =>
-        val now = System.nanoTime()
-        staleChecks.get(key) match {
-          case Some((t, fresh)) if (now - t) / 1000000L < stalenessIntervalMs => !fresh
-          case _ =>
-            val verdict: Option[Boolean] =
-              try Some(sourceSignature(session, path) == sig)
-              catch { case _: Exception => None }
-            val fresh = verdict.getOrElse(false)
-            staleChecks.put(key, (now, fresh))
-            verdict match {
-              case Some(false) =>
-                droppedStale.incrementAndGet()
-                logWarning(s"graft constraint rewrite: $path changed since its " +
-                  "constraints were verified — dropping every claim on it (exact plan)")
-                dropClaimsOn(key)
-              case None =>
-                logWarning(s"graft constraint rewrite: could not re-list $path to " +
-                  "verify constraint freshness — keeping the exact plan for this " +
-                  "check interval and retrying (claims kept)")
-              case Some(true) => ()
-            }
-            !fresh
-        }
-    }
-
-  /** Normalized root path of a V1 parquet leaf. */
-  private def pathOf(leaf: LogicalPlan): Option[String] = leaf match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation =>
-        h.location.rootPaths.headOption.map(_.toUri.getPath)
-      case _ => None
-    }
-    case _ => None
+    snapshots.forget(key)
   }
 
   /** Unwrap the dim side to its leaf through attr-only Projects and
@@ -307,7 +233,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     if (hazard) None
     else factSide.collectLeaves()
       .find(_.outputSet.contains(attr))
-      .flatMap(pathOf)
+      .flatMap(SourceSnapshots.scanPath)
   }
 
   /** The elimination: `proj` references only `factSide` output, `dim`
@@ -319,10 +245,9 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
       cond: Expression, cur: Option[SparkSession]): Option[LogicalPlan] = {
     val (dimLeaf, dimFilters) = stripDim(dimSide)
     for {
-      dimPath <- pathOf(dimLeaf)
+      dimPath <- SourceSnapshots.scanPath(dimLeaf)
       uniq <- uniques.get(dimPath)
-      if !uniq.session.sparkContext.isStopped || { dropClaimsOn(dimPath); false }
-      if cur.exists(_ eq uniq.session) // session-lived, like a temp view
+      if snapshots.owned(dimPath, Seq(uniq.session), cur)(dropClaimsOn(dimPath))
       // single-equality condition, keys plain attrs (a Cast on either
       // side means the types differ — the verified claim is typed)
       (a, b) <- cond match {
@@ -343,7 +268,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
       }
       // no dim column may outlive the join
       if projRefs.subsetOf(factSide.outputSet)
-      if !pathIsStale(uniq.session, dimPath, dimPath)
+      if !snapshots.isStale(dimPath)(dropClaimsOn(dimPath))
       // which claims does this join type need? outer = uniqueness only;
       // inner = + the FK (nothing may be dropped); LEFT SEMI = the FK
       // alone would do (dim duplicates don't duplicate a semi join's
@@ -365,8 +290,8 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
         fkOrigin(factSide, factKey).flatMap { factPath =>
           fks.get((factPath, factKey.name)) match {
             case Some(fk) if fk.dimPath == dimPath && fk.dimCol == uniq.keyCol &&
-                cur.exists(_ eq fk.session) &&
-                !pathIsStale(fk.session, factPath, factPath) => Some(true)
+                snapshots.admits(factPath, Seq(fk.session), cur)(
+                  dropClaimsOn(factPath)) => Some(true)
             case _ => None
           }
         }
@@ -429,16 +354,15 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private def dimClaimHolds(dimLeaf: LogicalPlan, dimFilters: Seq[Expression],
       dimKey: AttributeReference, cur: Option[SparkSession]): Option[String] =
     for {
-      dimPath <- pathOf(dimLeaf)
+      dimPath <- SourceSnapshots.scanPath(dimLeaf)
       uniq <- uniques.get(dimPath)
-      if !uniq.session.sparkContext.isStopped || { dropClaimsOn(dimPath); false }
-      if cur.exists(_ eq uniq.session)
+      if snapshots.owned(dimPath, Seq(uniq.session), cur)(dropClaimsOn(dimPath))
       if dimKey.name == uniq.keyCol
       if dimFilters.forall {
         case IsNotNull(x: AttributeReference) => x.exprId == dimKey.exprId
         case _ => false
       }
-      if !pathIsStale(uniq.session, dimPath, dimPath)
+      if !snapshots.isStale(dimPath)(dropClaimsOn(dimPath))
     } yield dimPath
 
   /** The verified-FK check for the fact side of a subquery predicate:
@@ -454,8 +378,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     fkOrigin(factChild, factKey).exists { factPath =>
       fks.get((factPath, factKey.name)).exists(fk =>
         fk.dimPath == dimPath && fk.dimCol == dimCol &&
-          cur.exists(_ eq fk.session) &&
-          !pathIsStale(fk.session, factPath, factPath))
+          snapshots.admits(factPath, Seq(fk.session), cur)(dropClaimsOn(factPath)))
     }
 
   // ---- uniqueness-driven DISTINCT elimination / COUNT(DISTINCT) fold -----
@@ -484,13 +407,11 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
     leafOf(plan).exists { leaf =>
-      leaf.outputSet.contains(attr) && pathOf(leaf).exists { path =>
+      leaf.outputSet.contains(attr) && SourceSnapshots.scanPath(leaf).exists { path =>
         uniques.get(path).exists { u =>
           u.keyCol == attr.name &&
             (!needNoNulls || u.noNulls) &&
-            (!u.session.sparkContext.isStopped || { dropClaimsOn(path); false }) &&
-            cur.exists(_ eq u.session) &&
-            !pathIsStale(u.session, path, path)
+            snapshots.admits(path, Seq(u.session), cur)(dropClaimsOn(path))
         }
       }
     }
@@ -714,7 +635,7 @@ object ConstraintRewrite extends Rule[LogicalPlan] with PredicateHelper {
     if (replaced.isEmpty) {
       // a registered dim was in play but the proof didn't close
       val dimRegistered = Seq(l, r).exists(s =>
-        pathOf(stripDim(s)._1).exists(uniques.contains))
+        SourceSnapshots.scanPath(stripDim(s)._1).exists(uniques.contains))
       if (dimRegistered) fallbacks.incrementAndGet()
     }
     replaced

@@ -35,11 +35,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * the optimized plan itself, plus a retry-once protocol:
   *
   *  1. build the query, inspect ITS OWN optimized plan for the splice;
-  *  2. on a miss, clear the planner's plan-time memoization
+  *  2. on a miss, clear the planner's plan-time memoization — the
+  *     rule's cached staleness verdicts in its [[SourceSnapshots]]
+  *     guard, plus the ANN probe decisions
   *     ([[AnnIndexRewrite.resetPlanCaches]] /
-  *     [[AggRewrite.resetPlanCaches]] — registrations untouched) and
-  *     re-plan a fresh build ONCE — a transient decline heals, a real
-  *     decline (no registration, non-re-aggregable shape) stays false;
+  *     [[AggRewrite.resetPlanCaches]] /
+  *     [[ConstraintRewrite.resetPlanCaches]] — registrations and their
+  *     snapshots untouched) and re-plan a fresh build ONCE — a
+  *     transient decline heals, a real decline (no registration,
+  *     non-re-aggregable shape) stays false;
   *  3. the caller executes the INSPECTED dataset eagerly
   *     (`localCheckpoint(true)` runs the same QueryExecution), so the
   *     pin is causally tied to the rows it is hashed with — not to a
@@ -92,7 +96,7 @@ object PlannerPin {
 
   /** True when the plan still scans `path` (V1 parquet leaf). */
   def scansPath(plan: LogicalPlan, path: String): Boolean = {
-    val norm = new org.apache.hadoop.fs.Path(path).toUri.getPath
+    val norm = SourceSnapshots.normalize(path)
     plan.collectLeaves().exists {
       case l: LogicalRelation => l.relation match {
         case h: HadoopFsRelation =>

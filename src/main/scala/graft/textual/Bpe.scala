@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.operators.Materialize
 
 /** Byte-Pair-Encoding tokenizer TRAINING as a distributed operator —
   * the subword-vocabulary step every LM data pipeline runs before
@@ -37,18 +38,6 @@ object Bpe {
   val SymEnd = "\u0002"
 
   final case class Merge(step: Int, lhs: String, rhs: String, pairCount: Long)
-
-  /** Unpersist the RDD a localCheckpointed frame pins to executor block
-    * managers (same discipline as Clusters: without it every merge
-    * round leaks one vocab copy for the life of the session). Also the
-    * seam callers use to release the returned final-word table.
-    */
-  private[graft] def unpersistCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Word-frequency table over whitespace tokens (TextFunctions.tokens
     * semantics — the suite's shared tokenizer). Words carrying the
@@ -102,7 +91,7 @@ object Bpe {
             lit(SymStart + a + SymStart + b),
             lit(SymStart + a.stripSuffix(SymEnd) + b)))
           .localCheckpoint(eager = true)
-        unpersistCheckpoint(prev) // each round's copy dies as the next lands
+        Materialize.unpersist(prev) // each round's copy dies as the next lands
         step += 1
       }
     }

@@ -147,7 +147,7 @@ object UnigramLm {
         }.toMap)
       }
       vocab
-    } finally Bpe.unpersistCheckpoint(words)
+    } finally graft.operators.Materialize.unpersist(words)
   }
 
   /** Viterbi segmentation of one word — pure BIGINT path scores; on a

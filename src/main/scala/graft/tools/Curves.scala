@@ -274,7 +274,7 @@ object Curves {
         val tokMs = onceMs {
           graft.textual.Bpe.tokenizeStats(c, "text", "doc_id", words).count()
         }
-        graft.textual.Bpe.unpersistCheckpoint(words)
+        graft.operators.Materialize.unpersist(words)
         // trainMs includes the count pass it starts from; report the
         // rounds-only residual so the flat part is visible
         println(f"| $label%s | $nd%d | $vocab%d | $countMs%.0f | ${math.max(trainMs - countMs, 0)}%.0f | $tokMs%.0f |")
@@ -310,7 +310,7 @@ object Curves {
           val t0 = System.nanoTime()
           val (ms, words) = graft.textual.Bpe.trainMerges(spark, docs, "text", m)
           val wall = (System.nanoTime() - t0) / 1e9
-          graft.textual.Bpe.unpersistCheckpoint(words)
+          graft.operators.Materialize.unpersist(words)
           val marginal = prev.map { case (pm, pw) => (wall - pw) / (ms.length - pm) }
           println(f"| $m | ${ms.length} | $wall%.1f | ${wall / math.max(ms.length, 1)}%.3f " +
             s"| ${marginal.map(x => f"$x%.3f").getOrElse("-")} |")

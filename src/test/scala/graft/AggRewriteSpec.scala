@@ -27,11 +27,9 @@ class AggRewriteSpec extends GraftSpec {
         min($"l_quantity").as("min_qty"), max($"l_quantity").as("max_qty"))
 
   /** Register the spec MV. `withColCount` carries the per-column
-    * non-null count AVG needs; `pathBacked = false` registers the
-    * DataFrame itself (exercising the once-per-pass splice guard).
+    * non-null count AVG needs.
     */
-  private def registerMv(withColCount: Boolean = true,
-      pathBacked: Boolean = true): String = {
+  private def registerMv(withColCount: Boolean = true): String = {
     val mv = li.groupBy($"l_returnflag", $"l_linestatus", $"l_linenumber")
       .agg(count(lit(1)).as("n"), sum($"l_orderkey").as("sum_ok"),
         count($"l_orderkey").as("n_ok"),
@@ -45,7 +43,7 @@ class AggRewriteSpec extends GraftSpec {
     AggRewrite.register(srcPath, AggRewrite.MvSpec(spark.read.parquet(tmp),
       groupCols = Seq("l_returnflag", "l_linestatus", "l_linenumber"),
       measures = measures,
-      mvPath = if (pathBacked) Some(tmp) else None))
+      mvPath = Some(tmp)))
     tmp
   }
 
@@ -500,36 +498,24 @@ class AggRewriteSpec extends GraftSpec {
     }
   }
 
-  test("two Aggregates in one plan: a DataFrame-backed MV splices exactly once") {
+  test("two Aggregates in one plan: each reads the MV fresh, rows exact") {
     AggRewrite.clear()
     def a = li.groupBy($"l_returnflag").agg(count(lit(1)).as("na"))
     def b = li.groupBy($"l_linestatus").agg(count(lit(1)).as("nb"))
     def both = a.crossJoin(b)
     val expected = both.collect().map(r => (r.getString(0), r.getLong(1),
       r.getString(2), r.getLong(3))).sortBy(t => (t._1, t._3)).toSeq
-    registerMv(pathBacked = false) // DataFrame-backed: one analyzed subtree
+    registerMv()
     spark.experimental.extraOptimizations = Seq(AggRewrite)
     try {
+      // each splice reads the MV parquet fresh, so both sides are
+      // answered from the MV without sharing exprIds (a shared analyzed
+      // subtree in two sibling Aggregates would corrupt attribute binding)
       val df = both
-      // exactly ONE side may splice the shared analyzed MV subtree —
-      // the second would duplicate its exprIds (ADVICE r17); the other
-      // side keeps the exact fact scan
-      val plan = df.queryExecution.optimizedPlan
-      val mvLeafCount = plan.collectLeaves().count {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation match {
-            case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              !h.location.rootPaths.exists(_.toUri.getPath ==
-                new org.apache.hadoop.fs.Path(srcPath).toUri.getPath)
-            case _ => false
-          }
-        case _ => false
-      }
-      assert(mvLeafCount <= 1, "the DataFrame-backed MV subtree appears at most once")
-      assert(scansLineitem(df), "the second Aggregate keeps the exact fact scan")
+      assert(!scansLineitem(df), "both Aggregates are answered from the MV")
       val got = df.collect().map(r => (r.getString(0), r.getLong(1),
         r.getString(2), r.getLong(3))).sortBy(t => (t._1, t._3)).toSeq
-      assert(got === expected, "the guarded plan still returns exact rows")
+      assert(got === expected, "two splices still return exact rows")
     } finally {
       spark.experimental.extraOptimizations = Nil
       AggRewrite.clear()
@@ -624,7 +610,7 @@ class AggRewriteSpec extends GraftSpec {
       AggRewrite.register(srcCopy, AggRewrite.MvSpec(spark.read.parquet(mvDir),
         groupCols = Seq("l_returnflag", "l_linestatus", "l_linenumber"),
         measures = Map("n" -> (("count", ""))), mvPath = Some(mvDir)))
-      spark.conf.set("spark.graft.agg.staleness.intervalMs", "0")
+      spark.conf.set("spark.graft.planner.staleness.intervalMs", "0")
       spark.experimental.extraOptimizations = Seq(AggRewrite)
       def q = spark.read.parquet(srcCopy).groupBy($"l_returnflag").agg(count(lit(1)).as("n"))
       assert(!scansPath(q, srcCopy), "fresh registration fires")
@@ -637,8 +623,41 @@ class AggRewriteSpec extends GraftSpec {
       assert(AggRewrite.droppedStale.get() > beforeDrop)
       // and the exact plan sees the appended rows
       assert(after.agg(sum($"n")).head().getLong(0) === 250L)
+
+      // the join view: one snapshot covers both sources, so appending to
+      // a copy of the orders source drops it too
+      val ordCopy = base.resolve("orders.parquet").toString
+      Tables.orders(spark, sfDir).write.parquet(ordCopy)
+      def joinQ = spark.read.parquet(srcCopy)
+        .join(spark.read.parquet(ordCopy), $"l_orderkey" === $"o_orderkey")
+        .groupBy($"o_orderpriority").agg(count(lit(1)).as("n"))
+      def total(df: DataFrame): Long = df.agg(sum($"n")).head().getLong(0)
+      val exactBefore = total(joinQ) // no join view registered yet
+      val jmvDir = base.resolve("jmv").toString
+      joinQ.write.parquet(jmvDir)
+      AggRewrite.registerJoin(srcCopy, ordCopy,
+        AggRewrite.JoinMvSpec(spark.read.parquet(jmvDir),
+          leftKey = "l_orderkey", rightKey = "o_orderkey",
+          groupCols = Seq("o_orderpriority"), measures = Map("n" -> (("count", ""))),
+          mvPath = Some(jmvDir)))
+      assert(!scansPath(joinQ, srcCopy) && !scansPath(joinQ, ordCopy),
+        "fresh join view fires")
+      // re-append one order that joins: its lineitems now match twice
+      val k = spark.read.parquet(srcCopy).select($"l_orderkey").head().get(0)
+      val dup = spark.read.parquet(ordCopy).filter($"o_orderkey" === lit(k))
+      spark.createDataFrame(java.util.Arrays.asList(dup.collect(): _*), dup.schema)
+        .write.mode("append").parquet(ordCopy)
+      val matching = spark.read.parquet(srcCopy).filter($"l_orderkey" === lit(k)).count()
+      assert(matching > 0)
+      val beforeJoinDrop = AggRewrite.droppedStale.get()
+      val afterJoin = joinQ
+      assert(scansPath(afterJoin, srcCopy) && scansPath(afterJoin, ordCopy),
+        "a stale join view must be dropped — the query runs the exact join")
+      assert(AggRewrite.droppedStale.get() > beforeJoinDrop)
+      assert(total(afterJoin) === exactBefore + matching,
+        "the exact join sees the appended order")
     } finally {
-      spark.conf.unset("spark.graft.agg.staleness.intervalMs")
+      spark.conf.unset("spark.graft.planner.staleness.intervalMs")
       spark.experimental.extraOptimizations = Nil
       AggRewrite.clear()
       val p = new org.apache.hadoop.fs.Path(base.toString)

@@ -42,13 +42,14 @@ class AnnRewriteSpec extends GraftSpec {
 
   private def registerExhaustive(): Unit = {
     val cent = IvfIndex.seedCentroids(emb, 4)
-    val idx = Hnsw.buildRoutedIndex(spark, emb, cent).localCheckpoint(true)
+    val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, emb, cent))
     // nprobe covers all 4 cells and efSearch exceeds every cell size, so
     // the registration may truthfully declare exhaustiveProbe — the
     // precondition the FILTERED rewrites require for their exactness
     // argument (an approximate registration keeps the exact plan there).
     AnnIndexRewrite.register(srcPath,
-      AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
+      AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+        indexPath = Some(idxPath), nprobe = 4, efSearch = 4096,
         exhaustiveProbe = true))
   }
 
@@ -178,9 +179,10 @@ class AnnRewriteSpec extends GraftSpec {
     AnnIndexRewrite.clear()
     val expected = filteredPattern(qv0).collect().map(r => (r.getLong(0), r.getDouble(1)))
     val cent = IvfIndex.seedCentroids(emb, 4)
-    val idx = Hnsw.buildRoutedIndex(spark, emb, cent).localCheckpoint(true)
+    val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, emb, cent))
     AnnIndexRewrite.register(srcPath,
-      AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
+      AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+        indexPath = Some(idxPath), nprobe = 4, efSearch = 4096,
         overfetch = 1, filteredOverfetch = 1, exhaustiveProbe = true))
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
@@ -212,9 +214,10 @@ class AnnRewriteSpec extends GraftSpec {
     AnnIndexRewrite.clear()
     val expected = filteredPattern(qv0).collect().map(r => (r.getLong(0), r.getDouble(1)))
     val cent = IvfIndex.seedCentroids(emb, 4)
-    val idx = Hnsw.buildRoutedIndex(spark, emb, cent).localCheckpoint(true)
+    val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, emb, cent))
     AnnIndexRewrite.register(srcPath,
-      AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096))
+      AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+        indexPath = Some(idxPath), nprobe = 4, efSearch = 4096))
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val skippedBefore = AnnIndexRewrite.filteredSkippedApprox.get()
@@ -355,9 +358,10 @@ class AnnRewriteSpec extends GraftSpec {
       transform($"embedding", x => (x.cast("double") / nrm).cast("float"))
         .as("embedding"))
     val cent = IvfIndex.seedCentroids(normed, 4)
-    val idx = Hnsw.buildRoutedIndex(spark, normed, cent).localCheckpoint(true)
+    val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, normed, cent))
     AnnIndexRewrite.register(srcPath,
-      AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
+      AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+        indexPath = Some(idxPath), nprobe = 4, efSearch = 4096,
         metric = "cosine", exhaustiveProbe = true))
   }
 
@@ -456,9 +460,10 @@ class AnnRewriteSpec extends GraftSpec {
     AnnIndexRewrite.clear()
     val expected = collectBatch(batchFilteredPattern)
     val cent = IvfIndex.seedCentroids(emb, 4)
-    val idx = Hnsw.buildRoutedIndex(spark, emb, cent).localCheckpoint(true)
+    val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, emb, cent))
     AnnIndexRewrite.register(srcPath,
-      AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
+      AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+        indexPath = Some(idxPath), nprobe = 4, efSearch = 4096,
         overfetch = 1, filteredOverfetch = 1, exhaustiveProbe = true))
     spark.conf.set("spark.graft.ann.batchRewrite.minScanBytes", "0")
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
@@ -606,11 +611,12 @@ class AnnRewriteSpec extends GraftSpec {
     emb.write.mode("overwrite").parquet(tmp)
     val snap = spark.read.parquet(tmp)
     val cent = IvfIndex.seedCentroids(snap, 4)
-    val idx = Hnsw.buildRoutedIndex(spark, snap, cent).localCheckpoint(true)
+    val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, snap, cent))
     AnnIndexRewrite.register(tmp,
-      AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
+      AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+        indexPath = Some(idxPath), nprobe = 4, efSearch = 4096,
         exhaustiveProbe = true))
-    spark.conf.set("spark.graft.ann.staleness.intervalMs", "0")
+    spark.conf.set("spark.graft.planner.staleness.intervalMs", "0")
     try {
       def pat: DataFrame = spark.read.parquet(tmp)
         .select($"vec_id",
@@ -635,7 +641,7 @@ class AnnRewriteSpec extends GraftSpec {
       val again = AnnIndexRewrite(pat.queryExecution.optimizedPlan)
       assert(again.collect { case j: Join => j }.isEmpty)
     } finally {
-      spark.conf.unset("spark.graft.ann.staleness.intervalMs")
+      spark.conf.unset("spark.graft.planner.staleness.intervalMs")
       AnnIndexRewrite.clear()
     }
   }
@@ -653,26 +659,23 @@ class AnnRewriteSpec extends GraftSpec {
     }
   }
   test("two ANN patterns in one query: no exprId collision, both exact") {
-    // a union of two kNN results over the same registered table: a
-    // DataFrame-backed spec may splice only ONCE per plan (the second
-    // pattern keeps the exact path); a path-backed spec splices fresh
-    // reads and may fire for both. Either way the RESULT must equal
-    // the pure-exact union — and analysis must not blow up on
-    // duplicated index attrs, which is what an unguarded second splice
-    // did.
+    // a union of two kNN results over the same registered table: every
+    // splice reads the path-backed index fresh, so both patterns may
+    // fire without duplicating index attrs (analysis would blow up on
+    // a shared subtree), and the RESULT must equal the pure-exact union.
     VectorExpressions.ensureRegistered(spark)
     AnnIndexRewrite.clear()
     val qv1 = qv0
     val qv2 = emb.filter($"vec_id" === 1).select("embedding").head().getSeq[Float](0).toArray
     def both: DataFrame = pattern(qv1).unionByName(pattern(qv2))
     val expected = both.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
-    registerExhaustive() // DataFrame-backed (indexPath = None)
+    registerExhaustive()
     spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
     try {
       val got = both.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
       assert(got.toSeq === expected.toSeq)
-      // path-backed: write the index, register with indexPath, expect
-      // BOTH patterns accelerated and the same exact rows
+      // a cell-partitioned index at approximate knobs: BOTH patterns
+      // accelerated, the same exact rows
       AnnIndexRewrite.clear()
       val cent = IvfIndex.seedCentroids(emb, 4)
       val tmp = java.nio.file.Files.createTempDirectory("graft_annidx_spec").toString
@@ -714,9 +717,10 @@ class AnnRewriteSpec extends GraftSpec {
       concat($"embedding".cast("array<double>"),
         array(sqrt(lit(m2) - selfDot))).cast("array<float>").as("embedding"))
     val cent = IvfIndex.seedCentroids(aug, 4)
-    val idx = Hnsw.buildRoutedIndex(spark, aug, cent).localCheckpoint(true)
+    val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, aug, cent))
     AnnIndexRewrite.register(srcPath,
-      AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
+      AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+        indexPath = Some(idxPath), nprobe = 4, efSearch = 4096,
         metric = "ip", exhaustiveProbe = true))
   }
 

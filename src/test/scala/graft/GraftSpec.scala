@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session (one per JVM — suites reuse it via getOrCreate). */
@@ -16,4 +16,13 @@ trait GraftSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Write `df` as parquet to a fresh temp directory and return its
+    * path — the planner registries take path-backed indexes and MVs.
+    */
+  def writeTemp(df: DataFrame, prefix: String = "graft_spec"): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    df.write.mode("overwrite").parquet(dir)
+    dir
+  }
 }

@@ -63,9 +63,10 @@ class PlannerPinSpec extends GraftSpec {
     AnnIndexRewrite.clear()
     withFlakySource("graft_pin_ann") { (src, emb) =>
       val cent = IvfIndex.seedCentroids(emb, 4)
-      val idx = Hnsw.buildRoutedIndex(spark, emb, cent).localCheckpoint(true)
+      val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, emb, cent))
       AnnIndexRewrite.register(src,
-        AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
+        AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+          indexPath = Some(idxPath), nprobe = 4, efSearch = 4096,
           exhaustiveProbe = true))
       val qv = emb.filter($"vec_id" === 0)
         .select("embedding").head().getSeq[Float](0).toArray
@@ -74,7 +75,7 @@ class PlannerPinSpec extends GraftSpec {
           VectorExpressions.l2Sq(typedLit(qv), $"embedding").as("dist2"))
         .orderBy($"dist2", $"vec_id").limit(10)
       // a poisoned verdict must outlive the test unless healed explicitly
-      spark.conf.set("spark.graft.ann.staleness.intervalMs", "3600000")
+      spark.conf.set("spark.graft.planner.staleness.intervalMs", "3600000")
       spark.experimental.extraOptimizations = Seq(AnnIndexRewrite)
       try {
         val detect = PlannerPin.annSpliced("vec_id") _
@@ -106,7 +107,7 @@ class PlannerPinSpec extends GraftSpec {
         assert(AnnIndexRewrite.droppedStale.get() === droppedBefore,
           "a transient failure must not drop the registration")
       } finally {
-        spark.conf.unset("spark.graft.ann.staleness.intervalMs")
+        spark.conf.unset("spark.graft.planner.staleness.intervalMs")
         spark.experimental.extraOptimizations = Nil
         AnnIndexRewrite.clear()
       }
@@ -124,7 +125,7 @@ class PlannerPinSpec extends GraftSpec {
         mvPath = Some(tmp)))
       def build(): DataFrame = emb.groupBy($"label").agg(count(lit(1)).as("n"))
       val detect = PlannerPin.aggSpliced(Seq(src)) _
-      spark.conf.set("spark.graft.agg.staleness.intervalMs", "3600000")
+      spark.conf.set("spark.graft.planner.staleness.intervalMs", "3600000")
       spark.experimental.extraOptimizations = Seq(AggRewrite)
       try {
         assert(detect(build().queryExecution.optimizedPlan),
@@ -145,7 +146,40 @@ class PlannerPinSpec extends GraftSpec {
         assert(AggRewrite.droppedStale.get() === droppedBefore,
           "a transient failure must not drop the registration")
       } finally {
-        spark.conf.unset("spark.graft.agg.staleness.intervalMs")
+        spark.conf.unset("spark.graft.planner.staleness.intervalMs")
+        spark.experimental.extraOptimizations = Nil
+        AggRewrite.clear()
+      }
+    }
+  }
+
+  test("Agg MV: a registration while listing fails is refused; a healthy one fires") {
+    AggRewrite.clear()
+    withFlakySource("graft_pin_refuse") { (src, emb) =>
+      val tmp = writeTemp(emb.groupBy($"label").agg(count(lit(1)).as("n")))
+      def register(): Unit =
+        AggRewrite.register(src, AggRewrite.MvSpec(spark.read.parquet(tmp),
+          groupCols = Seq("label"), measures = Map("n" -> (("count", ""))),
+          mvPath = Some(tmp)))
+      def build(): DataFrame = emb.groupBy($"label").agg(count(lit(1)).as("n"))
+      val detect = PlannerPin.aggSpliced(Seq(src)) _
+      spark.experimental.extraOptimizations = Seq(AggRewrite)
+      try {
+        // no snapshot can be taken: the registration must not be kept
+        // unguarded (a later change to the source would go unseen)
+        FlakyFs.fail.set(true)
+        register()
+        FlakyFs.fail.set(false)
+        val (df1, fired1) = PlannerPin.pinned(build _, detect,
+          () => AggRewrite.resetPlanCaches())
+        assert(!fired1, "a refused registration never fires, even once listing heals")
+        register()
+        val (df2, fired2) = PlannerPin.pinned(build _, detect, () => ())
+        assert(fired2, "re-registered with a healthy listing: the MV answers")
+        val rows1 = df1.collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).toSeq
+        val rows2 = df2.collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).toSeq
+        assert(rows1 === rows2)
+      } finally {
         spark.experimental.extraOptimizations = Nil
         AggRewrite.clear()
       }
@@ -171,9 +205,10 @@ class PlannerPinSpec extends GraftSpec {
       seed.write.parquet(src)
       val emb = spark.read.parquet(src)
       val cent = IvfIndex.seedCentroids(emb, 4)
-      val idx = Hnsw.buildRoutedIndex(spark, emb, cent).localCheckpoint(true)
+      val idxPath = writeTemp(Hnsw.buildRoutedIndex(spark, emb, cent))
       AnnIndexRewrite.register(src,
-        AnnIndexRewrite.IndexSpec(idx, cent, nprobe = 4, efSearch = 4096,
+        AnnIndexRewrite.IndexSpec(spark.read.parquet(idxPath), cent,
+          indexPath = Some(idxPath), nprobe = 4, efSearch = 4096,
           exhaustiveProbe = true))
       val qv = emb.filter($"vec_id" === 0)
         .select("embedding").head().getSeq[Float](0).toArray
